@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark main: times every registered query on SPARK_GRAFT_SF_DIR and
   * prints ONE JSON line. Materialization is the `noop` sink — it consumes
   * every row of every projected column without collecting to the driver,
@@ -30,23 +28,7 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-
-    def jstr(s: String): String =
-      "\"" + s.flatMap {
-        case '"' => "\\\""; case '\\' => "\\\\"
-        case c if c < ' ' => f"\\u${c.toInt}%04x"
-        case c => c.toString
-      } + "\""
+    val spark = GraftSession()
 
     // JVM/codegen warmup outside the timed region: the first query
     // otherwise absorbs ~3-4 s of classloading + codegen compilation
@@ -140,8 +122,6 @@ object Bench {
     val streamEps: Double =
       try {
         import org.apache.spark.sql.functions._
-        spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-          "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
         val ev = Tables.events(spark, sfDir)
           .select(col("user_id").cast("string").as("key"),
             col("event_type").as("value"),
@@ -167,14 +147,14 @@ object Bench {
       } catch { case _: Throwable => -1.0 }
 
     def fmt(v: Double): String = f"$v%.3f"
-    val qs = timings.map { case (k, v) => s"${jstr(k)}:${fmt(v)}" }.mkString("{", ",", "}")
-    val es = errors.map { case (k, v) => s"${jstr(k)}:${jstr(v)}" }.mkString("{", ",", "}")
+    val qs = timings.map { case (k, v) => s"${Json.str(k)}:${fmt(v)}" }.mkString("{", ",", "}")
+    val es = errors.map { case (k, v) => s"${Json.str(k)}:${Json.str(v)}" }.mkString("{", ",", "}")
     val total = timings.values.sum
-    val sp = spreads.map { case (k, v) => s"${jstr(k)}:${fmt(v)}" }.mkString("{", ",", "}")
-    val su = suspects.map(jstr).mkString("[", ",", "]")
-    val rt = retries.map { case (k, v) => s"${jstr(k)}:${fmt(v)}" }.mkString("{", ",", "}")
+    val sp = spreads.map { case (k, v) => s"${Json.str(k)}:${fmt(v)}" }.mkString("{", ",", "}")
+    val su = suspects.map(Json.str).mkString("[", ",", "]")
+    val rt = retries.map { case (k, v) => s"${Json.str(k)}:${fmt(v)}" }.mkString("{", ",", "}")
     val line =
-      s"""{"metric":"total","value":${fmt(total)},"unit":"sec","queries":$qs,"errors":$es,"rep_spread":$sp,"contention_suspect":$su,"retry":$rt,"n_ok":${timings.size},"n_err":${errors.size},"stream_events_per_sec":${fmt(streamEps)},"sf":${jstr(sfDir)}}"""
+      s"""{"metric":"total","value":${fmt(total)},"unit":"sec","queries":$qs,"errors":$es,"rep_spread":$sp,"contention_suspect":$su,"retry":$rt,"n_ok":${timings.size},"n_err":${errors.size},"stream_events_per_sec":${fmt(streamEps)},"sf":${Json.str(sfDir)}}"""
     // Persist the complete per-query line so timings are always
     // recoverable from the repo (target/ is runtime; BENCH_LOCAL.json is
     // the committed record of the last full local fold). The full line
@@ -201,10 +181,10 @@ object Bench {
       // probe — its delta vs ext_entity_components is the driver-visible
       // checkpoint write-through tax the r20 stride work targets
       "ext_entity_components_reliable")
-    val hq = headline.flatMap(k => timings.get(k).map(v => s"${jstr(k)}:${fmt(v)}"))
+    val hq = headline.flatMap(k => timings.get(k).map(v => s"${Json.str(k)}:${fmt(v)}"))
       .mkString("{", ",", "}")
     val compact =
-      s"""{"metric":"total","value":${fmt(total)},"unit":"sec","queries":$hq,"n_ok":${timings.size},"n_err":${errors.size},"n_contention_suspect":${suspects.size},"n_retry":${retries.size},"stream_events_per_sec":${fmt(streamEps)},"sf":${jstr(sfDir)},"full":"target/bench_latest.json"}"""
+      s"""{"metric":"total","value":${fmt(total)},"unit":"sec","queries":$hq,"n_ok":${timings.size},"n_err":${errors.size},"n_contention_suspect":${suspects.size},"n_retry":${retries.size},"stream_events_per_sec":${fmt(streamEps)},"sf":${Json.str(sfDir)},"full":"target/bench_latest.json"}"""
     println(compact)
     System.out.flush()
     spark.stop()

@@ -1,9 +1,8 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
-/** Times a single registered query (same session config + noop sink as
-  * Bench) — the per-query iteration loop for performance work.
+/** Times a single registered query (same GraftSession + noop sink as
+  * Bench, caches cleared between reps) — the per-query iteration loop
+  * for performance work.
   * Usage: runMain graft.TimeOne <queryName> [sfDir] [reps]
   */
 object TimeOne {
@@ -11,19 +10,7 @@ object TimeOne {
     val name = args(0)
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
     val reps = if (args.length > 2) args(2).toInt else 1
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    // factor>=100 fixtures need partitions ∝ data while thread count
-    // stays at the core count (the box-lessons knob law)
-    val parts = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS", cpus)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", parts)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession()
     // comma-separated names share one JVM (a fork costs ~30 s; a batch
     // of rows in one session is the practical iteration loop)
     name.split(",").map(_.trim).filter(_.nonEmpty).foreach { n =>
@@ -35,13 +22,7 @@ object TimeOne {
         q.run(spark, sfDir).write.format("noop").mode("overwrite").save()
         val s = (System.nanoTime() - t0) / 1e9
         best = math.min(best, s)
-        // SPARK_GRAFT_KEEP_CACHE=1 keeps caches across reps — for
-        // separating plan cost from IO/cache-population cost when a
-        // regression hunt needs a warm-vs-cold split (r14). Default
-        // (clear) measures the honest cold-path number.
-        if (!sys.env.get("SPARK_GRAFT_KEEP_CACHE").contains("1")) {
-          spark.catalog.clearCache(); graft.ext.Caches.releaseAll(spark)
-        }
+        spark.catalog.clearCache(); graft.ext.Caches.releaseAll(spark)
         println(f"[timeone] $n rep $i: $s%.2f s")
       }
       println(f"[timeone] $n BEST: $best%.2f s")

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -11,15 +10,7 @@ object Verify {
     val only: Option[Set[String]] =
       if (args.length > 2) Some(args(2).split(',').toSet) else None
     def keep(n: String) = only.forall(_.contains(n))
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession()
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries.filter(kv => keep(kv._1)).foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
@@ -31,18 +22,7 @@ object Verify {
       // caches accumulate and thrash the shared JVM
       spark.catalog.clearCache(); graft.ext.Caches.releaseAll(spark)
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
+    def q(s: String): String = Json.str(s)
     val json = SparkEntry.oracleSqlFor(spark, sfDir).filter(kv => keep(kv._1))
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
@@ -50,8 +30,8 @@ object Verify {
     // VERDICT item 5): hash each kernel's full raw output against the
     // COMMITTED hashes in src/main/resources/graft/golden_mm.txt so a
     // JDK/ImageIO drift fails loudly instead of silently shifting
-    // spec-only rows. GRAFT_GOLDEN_WRITE=1 regenerates the lines
-    // (target/golden_mm_<sf>.txt) after an INTENTIONAL kernel change.
+    // spec-only rows. `examples.GoldenWrite` regenerates the lines
+    // after an INTENTIONAL kernel change.
     // The gate's contract (r18 ADVICE, medium): golden_check.json is
     // ALWAYS written when the gate is in scope — a crash writes an
     // explicit {"error": ...} record instead of silently leaving the
@@ -59,12 +39,6 @@ object Verify {
     // from "gate never ran".
     if (only.isEmpty) try {
       val checks = graft.ext.GoldenHash.check(spark, sfDir)
-      val tag = graft.ext.GoldenHash.sfTag(sfDir)
-      if (sys.env.get("GRAFT_GOLDEN_WRITE").contains("1")) {
-        Files.writeString(Paths.get(s"target/golden_mm_$tag.txt"),
-          checks.map(c => s"$tag ${c.name} ${c.computed}").mkString("", "\n", "\n"))
-        println(s"[golden] wrote target/golden_mm_$tag.txt")
-      }
       val gj = checks.map(c =>
         s"${q(c.name)}: {${q("computed")}: ${q(c.computed)}, " +
         s"${q("committed")}: ${c.expected.map(q).getOrElse("null")}, " +

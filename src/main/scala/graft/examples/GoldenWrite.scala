@@ -1,7 +1,5 @@
 package graft.examples
 
-import org.apache.spark.sql.SparkSession
-
 /** Regenerates `src/main/resources/graft/golden_mm.txt` lines after an
   * INTENTIONAL decode-kernel change (r18, VERDICT item 5): computes
   * [[graft.ext.GoldenHash]] canonical hashes for every kernel at each
@@ -15,15 +13,7 @@ object GoldenWrite {
   def main(args: Array[String]): Unit = {
     val dirs = if (args.nonEmpty) args.toSeq
       else Seq("/root/testdata/sf0.001", "/root/testdata/sf0.01")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession()
     val lines = for (d <- dirs; name <- graft.ext.GoldenHash.kernels) yield {
       val h = graft.ext.GoldenHash.canonicalHash(
         graft.SparkEntry.queries(name)(spark, d))

@@ -1,8 +1,9 @@
 package graft.examples
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.DataFrame
 
+import graft.GraftSession
+import graft.examples.Probe._
 import graft.ext.Checkpoints.CutOps
 
 /** Reliable-checkpoint mode over the ITERATIVE graph family at scale
@@ -44,110 +45,36 @@ import graft.ext.Checkpoints.CutOps
   */
 object GraphCkptScale {
 
-  /** Order-insensitive distributed fingerprint: per-row md5 over the
-    * concatenated cells, folded by an executor-side SUM of the first
-    * 60 bits (exact as DECIMAL) plus a row count — one pass, nothing
-    * collected. Equal frames agree; a single changed row changes the
-    * sum with probability ~1. */
-  private def distHash(df: DataFrame): String = {
-    // Nulls rendered explicitly (r18 ADVICE): concat_ws SKIPS null
-    // cells, so (null,'a') vs ('a',null) — or null vs empty string —
-    // would otherwise hash identically. coalesce to a sentinel that
-    // cannot collide with a real cell (contains the field separator).
-    // The \u0001 separator landed in r19 as a literal control char --
-    // invisible to a grep, which read it as an empty string; written
-    // as an escape since r20 so the source audits as what it is.
-    val rowHash = md5(concat_ws("\u0001",
-      df.columns.map(c =>
-        coalesce(col(c).cast("string"), lit("\u0001NULL\u0001"))): _*))
-    val r = df.select(
-      sum(conv(substring(rowHash, 1, 15), 16, 10).cast("decimal(38,0)"))
-        .cast("string").as("h"),
-      count(lit(1)).as("n")).collect()(0)
-    s"${r.getString(0)}/${r.getLong(1)}"
-  }
-
-  private def dirBytes(p: String): Long = {
-    val root = java.nio.file.Paths.get(p)
-    if (!java.nio.file.Files.exists(root)) return 0L
-    val st = java.nio.file.Files.walk(root)
-    try st.filter(java.nio.file.Files.isRegularFile(_: java.nio.file.Path))
-      .mapToLong(java.nio.file.Files.size(_: java.nio.file.Path)).sum()
-    finally st.close()
-  }
-
   def main(args: Array[String]): Unit = {
     val factor = if (args.nonEmpty) args(0).toInt else 1000
     val src = "/root/testdata/sf0.1"
-    val out = s"/root/repo/target/sfx$factor"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val out = s"target/sfx$factor"
     // Shuffle partitions SCALE WITH THE DATA (arg 2 overrides): at
     // factor 1000 the pagerank pairs-distinct hash-aggregates ~600M
-    // rows — at the fixture-scale 32 partitions that is ~19M rows per
+    // rows — at fixture-scale partition counts that is ~19M rows per
     // task and 32 concurrent spill-merges in an 8g heap (measured OOM
     // in HashAggregateExec.finishAggregate). 256 partitions is the
     // cluster-shaped setting (partitions ∝ data, AQE coalesces the
     // small stages back down) and keeps every task's working set
     // bounded at the same heap.
+    val cpus = GraftSession.defaultCpus()
     val shufflePartitions =
       if (args.length > 1) args(1).toInt
-      else math.max(cpus.toInt, if (factor >= 100) 256 else cpus.toInt)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shufflePartitions)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
-      // r19 (VERDICT r18 item 2): lz4 the reliable-checkpoint stream —
-      // core conf, must be set at session build. The bigger lever was
-      // Checkpoints.pin: PageRank's loop-invariant edge/degree frames
-      // no longer route through the checkpoint FS at all.
-      .config("spark.checkpoint.compress", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    import spark.implicits._
+      else math.max(cpus, if (factor >= 100) 256 else cpus)
+    // lz4 the reliable-checkpoint stream and let the cleaner reclaim
+    // it — core confs, fixed at session build
+    val spark = GraftSession(cpus, extra = Map(
+      "spark.cleaner.referenceTracking.cleanCheckpoints" -> "true",
+      "spark.checkpoint.compress" -> "true"))
+    spark.conf.set("spark.sql.shuffle.partitions", shufflePartitions.toString)
 
     ScaleStress.buildLineitemFixture(spark, src, out, factor)
-    val ckptDir = s"/root/repo/target/relckpt-graph-$factor"
-
-    // synthetic pagerank graph, the graph_pagerank_scale discipline
-    def prEdges(): DataFrame = {
-      val n = 20000L * factor
-      val base = spark.range(n).select(col("id"))
-      val edges = base.select(explode(array(
-          struct(col("id").as("src"),
-            pmod(xxhash64(col("id"), lit(1)), lit(n)).as("dst")),
-          struct(col("id").as("src"),
-            pmod(xxhash64(col("id"), lit(2)), lit(n)).as("dst")),
-          struct(col("id").as("src"), ((col("id") + 1) % n).as("dst")))).as("e"))
-        .select(col("e.src").as("src"), col("e.dst").as("dst"))
-      edges.select(explode(array(
-          struct(col("src"), col("dst")),
-          struct(col("dst").as("src"), col("src").as("dst")))).as("e"))
-        .select(col("e.src").as("src"), col("e.dst").as("dst"))
-    }
-
-    // planted CC graph, the cc_scale discipline at 5M nodes
-    def ccEdges(): DataFrame = {
-      val half = 2500000L
-      val chains = spark.range(half - 1).filter(col("id") % 1000 =!= 999)
-        .select(col("id").as("doc_a"), (col("id") + 1).as("doc_b"))
-      val bs = 8
-      val pairsDf = (for { i <- 0 until bs; j <- (i + 1) until bs }
-        yield (i, j)).toDF("i", "j")
-      val cliques = spark.range(half / bs).crossJoin(pairsDf)
-        .select((lit(half) + col("id") * bs + col("i")).as("doc_a"),
-          (lit(half) + col("id") * bs + col("j")).as("doc_b"))
-      chains.unionByName(cliques)
-    }
+    val ckptDir = s"target/relckpt-graph-$factor"
 
     // warm the session-cached kNN fixture once (untimed) so both modes
     // measure the Borůvka contraction, not the shared prologue
     try {
-      graft.SparkEntry.queries("ext_mst_backbone")(spark, out)
-        .write.format("noop").mode("overwrite").save()
+      noop(graft.SparkEntry.queries("ext_mst_backbone")(spark, out))
       println("[graphckpt] mst kNN fixture warmed")
     } catch { case e: Throwable =>
       System.err.println(s"[graphckpt] mst warm failed: ${e.getMessage}")
@@ -193,12 +120,13 @@ object GraphCkptScale {
         // 6n directed edges, known exactly (ADVICE r19: the hint keeps
         // the >=10M-row pin single-copy instead of the two-phase
         // repartition that transiently doubled peak storage)
-        graft.ext.Graph.pageRank(prEdges(), iters = 3,
+        graft.ext.Graph.pageRank(pageRankEdges(spark, 20000L * factor), iters = 3,
           edgeRowsHint = Some(6L * 20000L * factor))
       }
       run("cc_planted_5m") {
         // edges are loop-invariant: pinned (lineage kept), not cut
-        graft.ext.Dedup.connectedComponents(ccEdges().pinInvariant())
+        graft.ext.Dedup.connectedComponents(
+          plantedCcEdges(spark, 2500000L).pinInvariant())
       }
       run("ext_mst_backbone") {
         graft.SparkEntry.queries("ext_mst_backbone")(spark, out)

@@ -1,7 +1,9 @@
 package graft.examples
 
-import graft.{SparkEntry, Tables}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.{GraftSession, Json, SparkEntry, Tables}
+import graft.examples.Probe._
+import graft.ext.Similarity
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.ext.Checkpoints.CutOps
 
@@ -22,9 +24,15 @@ import graft.ext.Checkpoints.CutOps
   * read-only driver fixtures are untouched, and correctness gates
   * still run exclusively on driver data.
   *
+  * The TPC-H family (`sql_*` rows, plus the `tpch_aqe` pseudo-name that
+  * reports the final adaptive plans of the five heaviest shapes) reads
+  * a separate FULL-WIDTH replica with dense keys, see
+  * [[buildTpchFixture]].
+  *
   * Usage: runMain graft.examples.ScaleStress [factor] [outDir] [src]
-  * Prints one JSON line: per-query best-of-2 seconds at the scaled
-  * fixture, plus row counts.
+  * [name,...] — e.g. `ScaleStress 10 target/sfx10 <sf0.1 dir>
+  * 'sql_*,tpch_aqe'` for the TPC-H curve. Prints one JSON line:
+  * per-query best-of-2 seconds at the scaled fixture, plus row counts.
   */
 object ScaleStress {
 
@@ -207,49 +215,29 @@ object ScaleStress {
     // broadcast (the MAD shape); expected linear in the scan
     "profile_winsorize")
 
+
   /** Replicated (l_orderkey, l_suppkey) lineitem projection — replica
     * i shifts orderkey by i·10⁹ and suppkey by i·10⁷, so the supplier
     * co-order graph becomes `factor` DISJOINT copies of the base graph:
     * node/edge counts scale by the factor while the per-order supplier
     * fan-out (the co-order join's expansion suspect) stays exactly the
-    * base distribution. Only the two graph-feeding columns are written
-    * — the kNN rows never read the rest, and parquet projection means
-    * a full-width replica would only add write cost. Built on demand
-    * (graph names requested). */
+    * base distribution. partkey strides by the SAME 10⁹ as the part
+    * fixture's p_partkey (a lineitem-part join matches every replica);
+    * money, quantity, date and flag columns ride unchanged (quantity,
+    * ship date and the two flags serve no row since `sql_*` reads the
+    * TPC-H replica; they stay so a fresh build matches the `_v3`
+    * fixtures already on disk). Only
+    * these columns are written — parquet projection means a full-width
+    * replica would only add write cost. Built on demand. */
   def buildLineitemFixture(spark: SparkSession, src: String, out: String,
-      factor: Int): Unit = {
-    // v3 marker (r15 part 4): + l_quantity/l_shipdate/l_returnflag/
-    // l_linestatus (the TPC-H Q1/Q19 columns), and l_partkey now
-    // strides by the SAME 1e9 as buildPartFixture's p_partkey — the old
-    // 1e7 stride meant a lineitem-part join at factor >= 2 silently
-    // matched only replica 0. Older fixtures on disk rebuild rather
-    // than failing rows with a missing-column error.
-    val fs = new java.io.File(s"$out/_built_li_v3_x$factor")
-    if (fs.exists()) return
-    val base = spark.read.parquet(s"$src/lineitem.parquet")
-      .select(col("l_orderkey"), col("l_suppkey"), col("l_partkey"),
-        col("l_extendedprice"), col("l_discount"), col("l_tax"),
-        col("l_quantity"), col("l_shipdate"),
-        col("l_returnflag"), col("l_linestatus"))
-    val replicated = (0 until factor).map { i =>
-      base.select(
-        (col("l_orderkey") + lit(i.toLong * 1000000000L)).as("l_orderkey"),
-        (col("l_suppkey") + lit(i.toLong * 10000000L)).as("l_suppkey"),
-        // r14 part 3b: partkey rides along (same disjoint-shift law) so
-        // the basket-mining row can ride this fixture; the kNN rows
-        // project it away at the parquet scan
-        (col("l_partkey") + lit(i.toLong * 1000000000L)).as("l_partkey"),
-        // r15: money columns ride unchanged (the reconciliation row
-        // recomputes per-order totals from them; replicas keep the base
-        // per-order arithmetic exactly, keyed under the shifted order)
-        col("l_extendedprice"), col("l_discount"), col("l_tax"),
-        // r15 part 4: Q1/Q19 predicate + aggregate columns ride
-        // unchanged — replicas repeat the base date/flag distribution
-        col("l_quantity"), col("l_shipdate"),
-        col("l_returnflag"), col("l_linestatus"))
-    }.reduce(_ unionByName _)
-    replicated.write.mode("overwrite").parquet(s"$out/lineitem.parquet")
-    fs.createNewFile(): Unit
+      factor: Int): Unit = once(out, s"_built_li_v3_x$factor") {
+    replicate(spark.read.parquet(s"$src/lineitem.parquet")
+      .select("l_orderkey", "l_suppkey", "l_partkey", "l_extendedprice",
+        "l_discount", "l_tax", "l_quantity", "l_shipdate", "l_returnflag",
+        "l_linestatus"),
+      "lineitem", out, factor,
+      Map("l_orderkey" -> 1000000000L, "l_suppkey" -> 10000000L,
+        "l_partkey" -> 1000000000L))
   }
 
   /** Replicated orders with the SAME 1e9 orderkey stride as the
@@ -257,64 +245,74 @@ object ScaleStress {
     * replicas (the reconciliation row joins them). Prices, statuses and
     * dates ride unchanged — the snapshot-diff derivation rules (%97 /
     * %13 / %89) hit shifted keys at the same rates. */
-  def buildOrdersFixture(spark: SparkSession, src: String,
-      out: String, factor: Int): Unit = {
-    val fs = new java.io.File(s"$out/_built_orders_x$factor")
-    if (fs.exists()) return
-    new java.io.File(out).mkdirs()
-    val base = spark.read.parquet(s"$src/orders.parquet")
-    val replicated = (0 until factor).map { i =>
-      base.select(
-        (col("o_orderkey") + lit(i.toLong * 1000000000L)).as("o_orderkey"),
-        (col("o_custkey") + lit(i.toLong * 1000000000L)).as("o_custkey"),
-        col("o_orderstatus"), col("o_totalprice"), col("o_orderdate"),
-        col("o_orderpriority"))
-    }.reduce(_ unionByName _)
-    replicated.write.mode("overwrite").parquet(s"$out/orders.parquet")
-    fs.createNewFile(): Unit
+  private def buildOrdersFixture(spark: SparkSession, src: String,
+      out: String, factor: Int): Unit = once(out, s"_built_orders_x$factor") {
+    replicate(spark.read.parquet(s"$src/orders.parquet")
+      .select("o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice",
+        "o_orderdate", "o_orderpriority"),
+      "orders", out, factor,
+      Map("o_orderkey" -> 1000000000L, "o_custkey" -> 1000000000L))
   }
 
-  /** Replicated customer (r20, ADVICE r19): c_custkey shifts by the
-    * SAME 1e9-per-replica stride as the orders fixture's o_custkey, so
-    * the ext_pagerank_personalized seed join (customer ⋈ trade pairs on
-    * custkey) finds every replica's BUILDING-segment customers;
-    * c_mktsegment rides unchanged, so the seed RATIO is
-    * factor-invariant. */
+  /** Replicated customer: c_custkey shifts by the SAME 1e9 stride as
+    * o_custkey, so the ext_pagerank_personalized seed join finds every
+    * replica's BUILDING-segment customers; c_mktsegment rides
+    * unchanged, so the seed RATIO is factor-invariant. */
   private def buildCustomerFixture(spark: SparkSession, src: String,
-      out: String, factor: Int): Unit = {
-    val fs = new java.io.File(s"$out/_built_customer_x$factor")
-    if (fs.exists()) return
-    new java.io.File(out).mkdirs()
-    val base = spark.read.parquet(s"$src/customer.parquet")
-    val replicated = (0 until factor).map { i =>
-      base.withColumn("c_custkey",
-        col("c_custkey") + lit(i.toLong * 1000000000L))
-    }.reduce(_ unionByName _)
-    replicated.write.mode("overwrite").parquet(s"$out/customer.parquet")
-    fs.createNewFile(): Unit
+      out: String, factor: Int): Unit = once(out, s"_built_customer_x$factor") {
+    replicate(spark.read.parquet(s"$src/customer.parquet"), "customer", out,
+      factor, Map("c_custkey" -> 1000000000L))
   }
 
-  /** Replicated part: keys shift, (price, size) ride unchanged — each
-    * replica re-plants the SAME Pareto frontier, so the skyline OUTPUT
-    * grows by the factor while the dominated mass (the pruning claim
-    * under test) grows identically. */
+  /** Replicated part: keys shift, (price, size, brand) ride unchanged —
+    * each replica re-plants the SAME Pareto frontier, so the skyline
+    * OUTPUT grows by the factor while the dominated mass (the pruning
+    * claim under test) grows identically. p_brand stays for the same
+    * reason as lineitem's flag columns (`_v2` fixtures on disk). */
   private def buildPartFixture(spark: SparkSession, src: String,
-      out: String, factor: Int): Unit = {
-    // v2 marker (r15 part 4): + p_brand (the Q19 clause key; replicas
-    // repeat the base brand distribution under shifted part keys)
-    val fs = new java.io.File(s"$out/_built_part_v2_x$factor")
-    if (fs.exists()) return
-    new java.io.File(out).mkdirs()
-    val base = spark.read.parquet(s"$src/part.parquet")
-      .select(col("p_partkey"), col("p_retailprice"), col("p_size"),
-        col("p_brand"))
-    val replicated = (0 until factor).map { i =>
-      base.select(
-        (col("p_partkey") + lit(i.toLong * 1000000000L)).as("p_partkey"),
-        col("p_retailprice"), col("p_size"), col("p_brand"))
-    }.reduce(_ unionByName _)
-    replicated.write.mode("overwrite").parquet(s"$out/part.parquet")
-    fs.createNewFile(): Unit
+      out: String, factor: Int): Unit = once(out, s"_built_part_v2_x$factor") {
+    replicate(spark.read.parquet(s"$src/part.parquet")
+      .select("p_partkey", "p_retailprice", "p_size", "p_brand"),
+      "part", out, factor, Map("p_partkey" -> 1000000000L))
+  }
+
+  /** Replicate events.parquet: each replica shifts user_id (fresh users,
+    * so funnel/retention/MAD group counts scale with the factor) and
+    * event_id; timestamps and the event-type mix stay as-is — the same
+    * 30-day window with factor× the users is exactly how a telemetry
+    * stream grows. The stride derives from the source: a fixed 1e9
+    * would alias replica ranges once source ids reach 1e9. */
+  private def buildEventsFixture(spark: SparkSession, src: String, out: String,
+      factor: Int): Unit = once(out, s"_built_events_x$factor") {
+    val ev = Tables.events(spark, src)
+    val mx = ev.agg(max("event_id"), max("user_id")).head
+    val stride = math.max(1000000000L,
+      math.max(mx.getLong(0), mx.getLong(1)) + 1L)
+    replicate(ev, "events", out, factor,
+      Map("event_id" -> stride, "user_id" -> stride))
+  }
+
+  /** Full-width TPC-H replica for the `sql_*` rows: replica i shifts every
+    * key by i·(base row count of the table that OWNS the key), so
+    * foreign keys shift identically on both sides and keys stay DENSE —
+    * the derived-`partsupp` CTE (`ps_suppkey = f(p_partkey) %
+    * COUNT(supplier)`, TpchTailQ) keeps its base hit-rate at every
+    * factor, and every header/detail/dim join matches within replicas
+    * only. Histograms replicate exactly, so a correctly-scaling query is
+    * LINEAR in wall. nation/region stay fixed (25/5 rows at any SF). */
+  def buildTpchFixture(spark: SparkSession, src: String, out: String,
+      factor: Int): Unit = once(out, s"_built_tpch_x$factor") {
+    val strides = Map(
+      "c_custkey" -> "customer", "o_custkey" -> "customer",
+      "s_suppkey" -> "supplier", "l_suppkey" -> "supplier",
+      "p_partkey" -> "part", "l_partkey" -> "part",
+      "o_orderkey" -> "orders", "l_orderkey" -> "orders"
+    ).view.mapValues(t => spark.read.parquet(s"$src/$t.parquet").count()).toMap
+    for (t <- Seq("customer", "supplier", "part", "orders", "lineitem"))
+      replicate(spark.read.parquet(s"$src/$t.parquet"), t, out, factor, strides)
+    for (t <- Seq("nation", "region"))
+      spark.read.parquet(s"$src/$t.parquet")
+        .write.mode("overwrite").parquet(s"$out/$t.parquet")
   }
 
   /** Rotation + rep-seeded sign flips: orthogonal, so norm and
@@ -336,11 +334,8 @@ object ScaleStress {
     out.toSeq
   }
 
-  def buildFixture(spark: SparkSession, src: String, out: String, factor: Int): Unit = {
-    val fs = new java.io.File(s"$out/_built_x$factor")
-    if (fs.exists()) return
-    new java.io.File(out).mkdirs()
-
+  def buildFixture(spark: SparkSession, src: String, out: String,
+      factor: Int): Unit = once(out, s"_built_x$factor") {
     // Seeded Fisher-Yates over the token sequence: the token HISTOGRAM
     // (quality/repetition distributions) is preserved exactly, but
     // every 3-gram shingle changes — a cyclic rotation would NOT do
@@ -359,7 +354,7 @@ object ScaleStress {
       t.mkString(" ")
     }
     val docs = Tables.documents(spark, src)
-    // stride derived from the source (ADVICE r9, same as events/emb)
+    // stride derived from the source (same rule as events/emb)
     val docStride = math.max(1000000000L,
       docs.agg(max("doc_id")).head.getLong(0) + 1L)
     val replicated = (0 until factor).map { i =>
@@ -380,9 +375,9 @@ object ScaleStress {
     // cosines preserved exactly — same distribution, bigger corpus).
     val mutateVec = udf { (e: Seq[Float], rep: Int) => mutateEmbedding(e, rep) }
     val emb = Tables.embeddings(spark, src)
-    // stride derived from the source (ADVICE r9): a fixed 1e9 shift
-    // silently aliases replica id ranges once source ids reach 1e9
-    // (chained scale-ups), flattening the expected group-count growth
+    // stride derived from the source: a fixed 1e9 shift silently
+    // aliases replica id ranges once source ids reach 1e9 (chained
+    // scale-ups), flattening the expected group-count growth
     val embStride = math.max(1000000000L,
       emb.agg(max("vec_id")).head.getLong(0) + 1L)
     val replicatedEmb = (0 until factor).map { i =>
@@ -393,72 +388,53 @@ object ScaleStress {
         col("label"))
     }.reduce(_ unionByName _)
     replicatedEmb.write.mode("overwrite").parquet(s"$out/embeddings.parquet")
-    fs.createNewFile(): Unit
   }
 
-  /** Replicate events.parquet: each replica shifts user_id (fresh users,
-    * so funnel/retention/MAD group counts scale with the factor) and
-    * event_id; timestamps and the event-type mix stay as-is — the same
-    * 30-day window with factor× the users is exactly how a telemetry
-    * stream grows. Separate marker: derived docs/emb fixtures predate
-    * this and stay valid. */
-  private def buildEventsFixture(spark: SparkSession, src: String, out: String,
-      factor: Int): Unit = {
-    val fs = new java.io.File(s"$out/_built_events_x$factor")
-    if (fs.exists()) return
-    new java.io.File(out).mkdirs()
-    val ev = Tables.events(spark, src)
-    // stride derived from the source (ADVICE r9): fixed 1e9 would alias
-    // replica ranges — and collapse "fresh users" — once source ids
-    // reach 1e9 on larger or chained fixtures
-    val mx = ev.agg(max("event_id"), max("user_id")).head
-    val stride = math.max(1000000000L,
-      math.max(mx.getLong(0), mx.getLong(1)) + 1L)
-    val replicated = (0 until factor).map { i =>
-      if (i == 0) ev
-      else ev.select(
-        (col("event_id") + lit(i.toLong * stride)).as("event_id"),
-        col("ts"),
-        (col("user_id") + lit(i.toLong * stride)).as("user_id"),
-        col("event_type"), col("value"), col("props"))
-    }.reduce(_ unionByName _)
-    replicated.write.mode("overwrite").parquet(s"$out/events.parquet")
-    fs.createNewFile(): Unit
+  private def pairs(df: DataFrame): Set[(Long, Long)] =
+    df.select("qid", "cid").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+
+  /** Exact top-10 (qid, cid) of the sampled queries over the whole
+    * corpus, ranked by `score` over (qe, ce) — a probe-sized cross
+    * join, the truth the approximate paths' recall is judged against. */
+  private def exactTop10(emb: DataFrame, qids: DataFrame, score: String,
+      vec: Column => Column = c => c): Set[(Long, Long)] = {
+    val qside = emb.join(broadcast(qids), "vec_id")
+      .select(col("vec_id").as("qid"), vec(col("embedding")).as("qe"))
+    val corpus = emb.select(col("vec_id").as("cid"), vec(col("embedding")).as("ce"))
+    pairs(broadcast(qside).join(corpus, col("qid") =!= col("cid"))
+      .select(col("qid"), col("cid"), expr(score).as("s"))
+      .groupBy("qid").agg(expr("topk_by_score(s, cid, 10)").as("top"))
+      .select(col("qid"), explode(col("top")).as("t"))
+      .select(col("qid"), col("t.id").as("cid")))
   }
 
   def main(args: Array[String]): Unit = {
     val factor = if (args.length > 0) args(0).toInt else 10
-    val out = if (args.length > 1) args(1) else s"/root/repo/target/sfx$factor"
+    val out = if (args.length > 1) args(1) else s"target/sfx$factor"
     val src = if (args.length > 2) args(2) else "/root/testdata/sf0.1"
-    // optional 4th arg: comma-separated subset of `heavy` (chunked runs)
-    val names = if (args.length > 3) args(3).split(',').toSeq else heavy
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    // factor>=100 needs partitions ∝ data at the fixed core count (the
-    // box-lessons knob law; AQE coalesces the small stages back down)
-    val parts = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS", cpus)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", parts)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // optional 4th arg: comma-separated subset of `heavy` (chunked
+    // runs); a name ending in `*` selects every registry row with that
+    // prefix (`sql_*` = the TPC-H family on its full-width fixture)
+    val names = (if (args.length > 3) args(3).split(',').toSeq else heavy)
+      .flatMap { n =>
+        if (n.endsWith("*")) SparkEntry.defs.map(_.name).filter(_.startsWith(n.init))
+        else Seq(n)
+      }
+    val spark = GraftSession()
 
-    // r19: the documents/embeddings/events replicas are the expensive
-    // builds at factor 1000; skip them when every requested row is
-    // relational-only (the ext_pagerank scale run reads just the
-    // lineitem+orders fixtures its own conditional block builds below)
+    // the documents/embeddings/events replicas are the expensive builds
+    // at factor 1000; skip them when every requested row is
+    // relational-only (each relational row builds its own fixtures
+    // below)
     val relationalOnly = Set("ext_pagerank", "ext_pagerank_personalized",
       "ext_triangle_count", "ext_clustering_coeff", "ext_kcore",
       "kcore_scale", "ext_link_prediction", "ext_bfs_distance",
       "ext_random_walk", "ext_copurchase_pairs", "ext_mst_backbone",
       "ext_assortativity", "etl_snapshot_diff", "etl_reconcile_totals",
-      "profile_histogram_eqdepth", "ext_skyline", "sql_tpch_q1",
-      "sql_tpch_q19", "skew_join_scale", "graph_pagerank_scale",
+      "profile_histogram_eqdepth", "ext_skyline", "tpch_aqe",
+      "skew_join_scale", "graph_pagerank_scale",
       "graph_labelprop_scale", "cc_scale")
-    val needsCorpus = !names.forall(relationalOnly)
+    val needsCorpus = !names.forall(n => relationalOnly(n) || n.startsWith("sql_"))
     if (needsCorpus) {
       buildFixture(spark, src, out, factor)
       buildEventsFixture(spark, src, out, factor)
@@ -467,6 +443,7 @@ object ScaleStress {
       spark.read.parquet(s"$out/documents.parquet").count() else 0L
     val nVecs = if (needsCorpus)
       spark.read.parquet(s"$out/embeddings.parquet").count() else 0L
+    def emb() = spark.read.parquet(s"$out/embeddings.parquet")
 
     val timings = scala.collection.mutable.LinkedHashMap[String, Double]()
     val errors = scala.collection.mutable.LinkedHashMap[String, String]()
@@ -479,38 +456,30 @@ object ScaleStress {
       "emb_pq_scale", "emb_ivfpq_scale", "graph_pagerank_scale",
       "graph_labelprop_scale", "er_matches_scale", "ivf_router_scale", "cc_scale",
       "setsim_fallback_scale", "kcore_scale", "bpe_scale",
-      "pca_highdim_scale", "skew_join_scale")
-    // the kNN-graph registry rows read lineitem, which the base fixture
-    // does not replicate — build the 2-column projection on demand
-    val graphNames = Set("ext_triangle_count", "ext_clustering_coeff",
-      "ext_kcore", "kcore_scale", "ext_link_prediction", "ext_bfs_distance",
-      "ext_random_walk", "ext_copurchase_pairs", "ext_mst_backbone",
-      "ext_assortativity")
-    if (names.exists(graphNames)) buildLineitemFixture(spark, src, out, factor)
-    // r15 audit/skyline rows: header + detail-money + part fixtures
-    if (names.contains("etl_reconcile_totals") || names.contains("sql_tpch_q1")
-        || names.contains("sql_tpch_q19"))
-      buildLineitemFixture(spark, src, out, factor)
-    if (names.contains("etl_snapshot_diff") || names.contains("etl_reconcile_totals")
-        || names.contains("profile_histogram_eqdepth"))
-      buildOrdersFixture(spark, src, out, factor)
-    if (names.contains("ext_skyline") || names.contains("sql_tpch_q19"))
-      buildPartFixture(spark, src, out, factor)
-    // r19 (VERDICT r18 item 3): the REGISTRY ext_pagerank row at scale —
-    // its orders⋈lineitem trade-graph prologue needs both fixtures.
-    // r20 (ADVICE r19): the personalized row shares the prologue AND
-    // reads customer from the out dir for its seed set — gate covers
-    // it, plus the customer replica its seed join needs.
-    if (names.contains("ext_pagerank")
-        || names.contains("ext_pagerank_personalized")) {
-      buildLineitemFixture(spark, src, out, factor)
-      buildOrdersFixture(spark, src, out, factor)
-    }
-    if (names.contains("ext_pagerank_personalized"))
-      buildCustomerFixture(spark, src, out, factor)
+      "pca_highdim_scale", "skew_join_scale", "tpch_aqe")
     val unknown = names.filterNot(n => byName.contains(n) || pseudoNames(n))
     require(unknown.isEmpty,
       s"unknown query names (not in SparkEntry.defs or $pseudoNames): ${unknown.mkString(",")}")
+    // the kNN-graph, audit and trade-graph rows read lineitem, which the
+    // base fixture does not replicate — build the projection on demand
+    val lineitemNames = Set("ext_triangle_count", "ext_clustering_coeff",
+      "ext_kcore", "kcore_scale", "ext_link_prediction", "ext_bfs_distance",
+      "ext_random_walk", "ext_copurchase_pairs", "ext_mst_backbone",
+      "ext_assortativity", "etl_reconcile_totals", "ext_pagerank",
+      "ext_pagerank_personalized")
+    if (names.exists(lineitemNames)) buildLineitemFixture(spark, src, out, factor)
+    if (names.exists(Set("etl_snapshot_diff", "etl_reconcile_totals",
+        "profile_histogram_eqdepth", "ext_pagerank", "ext_pagerank_personalized")))
+      buildOrdersFixture(spark, src, out, factor)
+    if (names.contains("ext_skyline")) buildPartFixture(spark, src, out, factor)
+    if (names.contains("ext_pagerank_personalized"))
+      buildCustomerFixture(spark, src, out, factor)
+    // the TPC-H family needs dense full-width keys, so it reads its own
+    // replica (factor 1 = the source itself)
+    val tpchDir = if (factor <= 1) src else s"target/tpch_scale/x$factor"
+    if (factor > 1 && names.exists(n => n.startsWith("sql_") || n == "tpch_aqe"))
+      buildTpchFixture(spark, src, tpchDir, factor)
+
     // disk-bound rows at factor 1000 can't afford two reps' worth of
     // accumulated shuffle files; SPARK_GRAFT_SCALE_REPS=1 trades the
     // min-of-2 discipline for half the peak spill (note it in SCALE.md)
@@ -518,13 +487,14 @@ object ScaleStress {
       .flatMap(_.toIntOption).filter(_ > 0).getOrElse(2)
     names.filter(byName.contains).foreach { name =>
       val q = byName(name)
+      val dir = if (name.startsWith("sql_")) tpchDir else out
       var best = Double.MaxValue
       var rep = 0
       var failed = false
       while (rep < reps && !failed) {
         val t0 = System.nanoTime()
         try {
-          q.run(spark, out).write.format("noop").mode("overwrite").save()
+          noop(q.run(spark, dir))
           best = math.min(best, (System.nanoTime() - t0) / 1e9)
         } catch {
           case e: Throwable =>
@@ -543,111 +513,69 @@ object ScaleStress {
       } else System.err.println(s"[scale] $name FAILED: ${errors(name)}")
     }
 
+    /** Best-of-2 wall of one production path over the embedding fixture. */
+    def embRow(key: String, label: => String)(mk: DataFrame => DataFrame): Unit = {
+      val e = emb()
+      val best = bestOf(spark)(noop(mk(e)))
+      timings(key) = best
+      System.err.println(f"[scale] $key ($label): $best%.2f s")
+    }
+
     // The production scaling knob: IVF nCells ∝ corpus size keeps cell
     // cardinality constant, so per-query probe cost is flat and total
-    // batch cost grows ~linearly with |Q|. Since round 7 this IS the
-    // registry default (Similarity.autoNCells — knob auto-scaling), so
-    // this block measures the same auto path explicitly and gates the
-    // recall claim.
-    if (names.contains("ext_ivf_topk_batch")) {
-      val embS = spark.read.parquet(s"$out/embeddings.parquet")
-      var best = Double.MaxValue
-      var rep = 0
-      while (rep < 2) {
-        val t0 = System.nanoTime()
-        graft.ext.Similarity
-          .ivfTopK(embS, queries = embS.select("vec_id"), k = 10) // auto knobs
-          .write.format("noop").mode("overwrite").save()
-        best = math.min(best, (System.nanoTime() - t0) / 1e9)
-        spark.catalog.clearCache(); graft.ext.Caches.releaseAll(spark)
-        rep += 1
+    // batch cost grows ~linearly with |Q|. This IS the registry default
+    // (Similarity.autoNCells), so this block measures the same auto path
+    // explicitly and gates the recall claim.
+    if (names.contains("ext_ivf_topk_batch"))
+      embRow("ext_ivf_topk_batch_tuned",
+          s"auto nCells=${Similarity.autoNCells(emb().count())}") { e =>
+        Similarity.ivfTopK(e, queries = e.select("vec_id"), k = 10)
       }
-      timings("ext_ivf_topk_batch_tuned") = best
-      System.err.println(
-        f"[scale] ext_ivf_topk_batch_tuned (auto nCells=${graft.ext.Similarity.autoNCells(embS.count())}): $best%.2f s")
-    }
 
     // Recall gate, runnable WITHOUT the (factor²-cost) full-corpus
     // batch timing above — pass the pseudo-name "ivf_recall" for the
-    // 100×-and-up columns where only the gate matters (r8 item 7).
+    // 100×-and-up columns where only the gate matters. The cost claim
+    // is honest only next to a recall number at the SAME scale:
+    // 50-query sample, tuned-IVF top-10 vs the exact brute-force top-10.
     if (names.contains("ext_ivf_topk_batch") || names.contains("ivf_recall")) {
-      val embS = spark.read.parquet(s"$out/embeddings.parquet")
-      // the cost claim above is honest only next to a recall number at
-      // the SAME scale: 50-query sample, tuned-IVF top-10 vs the exact
-      // brute-force top-10 (1M-pair cross join — probe-sized, not a
-      // benchmark)
+      val embS = emb()
       graft.functions.GraftFunctions.ensureRegistered(spark)
       val qids = embS.select("vec_id").orderBy("vec_id").limit(50)
-      val qside = embS.join(broadcast(qids), "vec_id")
-        .select(col("vec_id").as("qid"), col("embedding").as("qe"))
-      val corpus = embS.select(col("vec_id").as("cid"), col("embedding").as("ce"))
-      val exact = broadcast(qside).join(corpus, col("qid") =!= col("cid"))
-        .select(col("qid"), col("cid"), expr("cosine_sim(qe, ce)").as("cos"))
-        .groupBy("qid").agg(expr("topk_by_score(cos, cid, 10)").as("top"))
-        .select(col("qid"), explode(col("top")).as("t"))
-        .select(col("qid"), col("t.id").as("cid"))
-        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+      val exact = exactTop10(embS, qids, "cosine_sim(qe, ce)")
       val tIvf0 = System.nanoTime()
-      val ivf = graft.ext.Similarity
-        .ivfTopK(embS, queries = qids, k = 10) // auto knobs
-        .select("qid", "cid")
-        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+      val ivf = pairs(Similarity.ivfTopK(embS, queries = qids, k = 10))
       val ivfSec = (System.nanoTime() - tIvf0) / 1e9
       val recall = (ivf & exact).size.toDouble / math.max(exact.size, 1)
       timings("ext_ivf_topk_batch_tuned_recall") = recall
       timings("ivf_recall_sampled") = ivfSec
       System.err.println(
         f"[scale] auto-IVF sampled (50 q): $ivfSec%.2f s, recall@10 vs exact: $recall%.3f")
-      // the auto-knob contract (VERDICT r5/r6 task 4): at the 10x
-      // fixture and beyond, auto params must hold recall@10 >= 0.95 —
-      // fail the run loudly, not silently, if scaling breaks it
+      // the auto-knob contract: at the 10x fixture and beyond, auto
+      // params must hold recall@10 >= 0.95 — fail the run loudly
       require(factor < 10 || recall >= 0.95,
         f"auto-IVF recall@10 $recall%.3f < 0.95 at factor $factor%d")
     }
 
-    // BRP sampled recall + wall (r17, VERDICT r16 item 7): the
-    // full-corpus batch above is factor²-cost, so the fourth-decade
-    // column runs the SAME 50-query sample as ivf_recall through the
-    // auto-knob BRP path and gates recall@10 vs exact cosine. Note the
-    // auto bucketLength law floors at 0.1 (r17 revision; binds past
-    // n ≈ 4500) — past the floor the buckets are WIDER than 1/sqrt(n)
-    // would give, so candidate volume per query grows with density
-    // (recall holds, cost grows); the wall number measures that trade.
+    // BRP sampled recall + wall: the full-corpus batch is factor²-cost,
+    // so this runs the SAME 50-query sample as ivf_recall through the
+    // auto-knob BRP path and gates recall@10 vs exact cosine. The auto
+    // bucketLength law floors at 0.1 (binds past n ≈ 4500) — past the
+    // floor the buckets are WIDER than 1/sqrt(n) would give, so
+    // candidate volume per query grows with density (recall holds, cost
+    // grows); the wall number measures that trade.
     if (names.contains("ann_recall")) {
-      val embS = spark.read.parquet(s"$out/embeddings.parquet")
-      val nEmb = embS.count()
+      val embS = emb()
       graft.functions.GraftFunctions.ensureRegistered(spark)
       val qids = embS.select("vec_id").orderBy("vec_id").limit(50)
-      val bl = graft.ext.Similarity.autoBucketLength(nEmb)
-      var best = Double.MaxValue
-      var rep = 0
-      while (rep < 2) {
-        val t0 = System.nanoTime()
-        graft.ext.Similarity
-          .annTopK(embS, queries = qids, k = 10, bucketLength = bl,
-            numTables = 8, maxDistance = 2.0)
-          .write.format("noop").mode("overwrite").save()
-        best = math.min(best, (System.nanoTime() - t0) / 1e9)
-        spark.catalog.clearCache(); graft.ext.Caches.releaseAll(spark)
-        rep += 1
-      }
+      val bl = Similarity.autoBucketLength(embS.count())
+      def ann() = Similarity.annTopK(embS, queries = qids, k = 10,
+        bucketLength = bl, numTables = 8, maxDistance = 2.0)
+      val best = bestOf(spark)(noop(ann()))
       timings("ann_recall_sampled") = best
-      val qside = embS.join(broadcast(qids), "vec_id")
-        .select(col("vec_id").as("qid"), col("embedding").as("qe"))
-      val corpus = embS.select(col("vec_id").as("cid"), col("embedding").as("ce"))
-      val exact = broadcast(qside).join(corpus, col("qid") =!= col("cid"))
-        .select(col("qid"), col("cid"), expr("cosine_sim(qe, ce)").as("cos"))
-        .groupBy("qid").agg(expr("topk_by_score(cos, cid, 10)").as("top"))
-        .select(col("qid"), explode(col("top")).as("t"))
-        .select(col("qid"), col("t.id").as("cid"))
-        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-      val ann = graft.ext.Similarity
-        .annTopK(embS, queries = qids, k = 10, bucketLength = bl,
-          numTables = 8, maxDistance = 2.0)
-        .select("qid", "cid")
-        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+      val exact = exactTop10(embS, qids, "cosine_sim(qe, ce)")
+      val got = pairs(ann())
       spark.catalog.clearCache(); graft.ext.Caches.releaseAll(spark)
-      val recall = (ann & exact).size.toDouble / math.max(exact.size, 1)
+      val recall = (got & exact).size.toDouble / math.max(exact.size, 1)
       timings("ann_recall_sampled_recall") = recall
       System.err.println(
         f"[scale] BRP annTopK sampled (bucketLength=$bl%.3f): $best%.2f s, recall@10 vs exact: $recall%.3f")
@@ -660,129 +588,58 @@ object ScaleStress {
     // corpus densifies. Cost-only measurement; the recall/width
     // trade-off is characterized in ExtSpec at oracle scale.
     if (names.contains("ext_ann_topk_batch")) {
-      val embS = spark.read.parquet(s"$out/embeddings.parquet")
-      val nEmb = embS.count()
-      var best = Double.MaxValue
-      var rep = 0
-      while (rep < 2) {
-        val t0 = System.nanoTime()
-        graft.ext.Similarity
-          .annTopK(embS, queries = embS.select("vec_id"),
-            k = 10, bucketLength = graft.ext.Similarity.autoBucketLength(nEmb),
-            numTables = 8, maxDistance = 2.0)
-          .write.format("noop").mode("overwrite").save()
-        best = math.min(best, (System.nanoTime() - t0) / 1e9)
-        spark.catalog.clearCache(); graft.ext.Caches.releaseAll(spark)
-        rep += 1
+      val bl = Similarity.autoBucketLength(emb().count())
+      embRow("ext_ann_topk_batch_tuned", f"auto bucketLength=$bl%.3f") { e =>
+        Similarity.annTopK(e, queries = e.select("vec_id"), k = 10,
+          bucketLength = bl, numTables = 8, maxDistance = 2.0)
       }
-      timings("ext_ann_topk_batch_tuned") = best
-      System.err.println(f"[scale] ext_ann_topk_batch_tuned (auto bucketLength=${graft.ext.Similarity.autoBucketLength(nEmb)}%.3f): $best%.2f s")
     }
 
     // Third knob: the embedding-dedup AND-amplification width. Bucket
     // occupancy (and so Σ bucket² candidate volume) grows with corpus
     // density at fixed params; one more projection per composite key
     // (6 -> 8) re-tightens the buckets.
-    if (names.contains("emb_dedup_lsh")) {
-      val embS = spark.read.parquet(s"$out/embeddings.parquet")
-      var best = Double.MaxValue
-      var rep = 0
-      while (rep < 2) {
-        val t0 = System.nanoTime()
-        graft.ext.Dedup
-          .cosineCanonicalLsh(embS, threshold = 0.9) // auto AND-width
-          .write.format("noop").mode("overwrite").save()
-        best = math.min(best, (System.nanoTime() - t0) / 1e9)
-        spark.catalog.clearCache(); graft.ext.Caches.releaseAll(spark)
-        rep += 1
+    if (names.contains("emb_dedup_lsh"))
+      embRow("emb_dedup_lsh_tuned",
+          s"auto hashesPerTable=${Similarity.autoHashesPerTable(emb().count())}") { e =>
+        graft.ext.Dedup.cosineCanonicalLsh(e, threshold = 0.9)
       }
-      timings("emb_dedup_lsh_tuned") = best
-      System.err.println(
-        f"[scale] emb_dedup_lsh_tuned (auto hashesPerTable=${graft.ext.Similarity.autoHashesPerTable(embS.count())}): $best%.2f s")
-    }
 
-    // k-means / PCA at scale: the registry rows (emb_kmeans,
+    // k-means / PQ / PCA at scale: the registry rows (emb_kmeans,
     // emb_covariance) run the sorted-fold ORACLE discipline, whose
     // collect_list is cluster-sized — deliberately fixture-only. These
     // pseudo-names time the production paths instead: plain-mean Lloyd
-    // (map-side-combinable update, codegen assign) and the one-pass
-    // treeAggregate covariance + Jacobi + broadcast projection.
-    if (names.contains("emb_kmeans_scale")) {
-      val embS = spark.read.parquet(s"$out/embeddings.parquet")
-      var best = Double.MaxValue
-      var rep = 0
-      while (rep < 2) {
-        val t0 = System.nanoTime()
-        graft.ext.Embeddings.lloyd(embS, k = 8, iters = 2)
-          .write.format("noop").mode("overwrite").save()
-        best = math.min(best, (System.nanoTime() - t0) / 1e9)
-        spark.catalog.clearCache(); graft.ext.Caches.releaseAll(spark)
-        rep += 1
+    // (map-side-combinable update, codegen assign), PQ encoding, and the
+    // one-pass treeAggregate covariance + Jacobi + broadcast projection.
+    if (names.contains("emb_kmeans_scale"))
+      embRow("emb_kmeans_scale", "k=8, 2 sweeps, plain-mean") { e =>
+        graft.ext.Embeddings.lloyd(e, k = 8, iters = 2)
       }
-      timings("emb_kmeans_scale") = best
-      System.err.println(f"[scale] emb_kmeans_scale (k=8, 2 sweeps, plain-mean): $best%.2f s")
-    }
-    if (names.contains("emb_pq_scale")) {
-      val embS = spark.read.parquet(s"$out/embeddings.parquet")
-      var best = Double.MaxValue
-      var rep = 0
-      while (rep < 2) {
-        val t0 = System.nanoTime()
-        graft.ext.Embeddings.pqEncode(embS)
-          .write.format("noop").mode("overwrite").save()
-        best = math.min(best, (System.nanoTime() - t0) / 1e9)
-        spark.catalog.clearCache(); graft.ext.Caches.releaseAll(spark)
-        rep += 1
+    if (names.contains("emb_pq_scale"))
+      embRow("emb_pq_scale", "m=8 ksub=16, 2 sweeps") { e =>
+        graft.ext.Embeddings.pqEncode(e)
       }
-      timings("emb_pq_scale") = best
-      System.err.println(f"[scale] emb_pq_scale (m=8 ksub=16, 2 sweeps): $best%.2f s")
-    }
-    if (names.contains("emb_pca_scale")) {
-      val embS = spark.read.parquet(s"$out/embeddings.parquet")
-      var best = Double.MaxValue
-      var rep = 0
-      while (rep < 2) {
-        val t0 = System.nanoTime()
-        val (proj, _) = graft.ext.Embeddings.pcaProject(embS, k = 2)
-        proj.write.format("noop").mode("overwrite").save()
-        best = math.min(best, (System.nanoTime() - t0) / 1e9)
-        spark.catalog.clearCache(); graft.ext.Caches.releaseAll(spark)
-        rep += 1
+    if (names.contains("emb_pca_scale"))
+      embRow("emb_pca_scale", "one-pass cov + project") { e =>
+        graft.ext.Embeddings.pcaProject(e, k = 2)._1
       }
-      timings("emb_pca_scale") = best
-      System.err.println(f"[scale] emb_pca_scale (one-pass cov + project): $best%.2f s")
-    }
+    // The d > 1024 distributed PCA path: JL-lift the fixture to 1536
+    // dims, then subspace iteration whose every Cov·Q product is one
+    // treeAggregate pass (d x k accumulator, no d x d matrix anywhere).
+    // Expected ~linear in rows with a FLAT pass count (the spectrum,
+    // not the corpus size, bounds iterations); the persisted expanded
+    // corpus is the working set (n x 1536 doubles — MEMORY_AND_DISK
+    // spills past ~500k rows on one box).
+    if (names.contains("pca_highdim_scale"))
+      embRow("pca_highdim_scale", "d=1536 lift + power iteration, k=4") { e =>
+        graft.ext.Embeddings.pcaProject(
+          graft.ext.Embeddings.jlExpand(e, 1536, 64), k = 4)._1
+      }
 
-    // r16 (VERDICT r15 item 1): the d > 1024 distributed PCA path —
-    // JL-lift the fixture to 1536 dims, then subspace iteration whose
-    // every Cov·Q product is one treeAggregate pass (d x k accumulator,
-    // no d x d matrix anywhere). Expected ~linear in rows with a FLAT
-    // pass count (the spectrum, not the corpus size, bounds
-    // iterations); the persisted expanded corpus is the working set
-    // (n x 1536 doubles — on a real cluster it spreads across
-    // executors, here MEMORY_AND_DISK spills past ~500k rows).
-    if (names.contains("pca_highdim_scale")) {
-      val embS = spark.read.parquet(s"$out/embeddings.parquet")
-      var best = Double.MaxValue
-      var rep = 0
-      while (rep < 2) {
-        val t0 = System.nanoTime()
-        val lifted = graft.ext.Embeddings.jlExpand(embS, 1536, 64)
-        val (proj, _) = graft.ext.Embeddings.pcaProject(lifted, k = 4)
-        proj.write.format("noop").mode("overwrite").save()
-        best = math.min(best, (System.nanoTime() - t0) / 1e9)
-        spark.catalog.clearCache(); graft.ext.Caches.releaseAll(spark)
-        rep += 1
-      }
-      timings("pca_highdim_scale") = best
-      System.err.println(
-        f"[scale] pca_highdim_scale (d=1536 lift + power iteration, k=4): $best%.2f s")
-    }
-
-    // r16 (VERDICT r15 item 5): the hot-key join decade — 30% of all
-    // events collapse onto ONE user, joined to the unreplicated
-    // customer dim with broadcast disabled (the 100 TB regime where
-    // both sides shuffle). Three treatments of the same data:
+    // The hot-key join decade — 30% of all events collapse onto ONE
+    // user, joined to the unreplicated customer dim with broadcast
+    // disabled (the 100 TB regime where both sides shuffle). Three
+    // treatments of the same data:
     //   straggler — plain shuffle join, AQE skew handling OFF: one
     //     reduce task owns the hot key's entire fan-in;
     //   salted — the join_skew_salted registry shape (dim replicated
@@ -794,10 +651,8 @@ object ScaleStress {
     //     (the honest finding: at small factors AQE leaves the skew
     //     alone and the salt is the only lever).
     if (names.contains("skew_join_scale")) {
-      // r20 (ADVICE r19): this gate is relational-only runnable, so the
-      // top-of-run corpus/events build may have been skipped — build the
-      // events replica here (the _built marker makes it idempotent when
-      // the full build already ran)
+      // relational-only runnable, so the corpus/events build above may
+      // have been skipped (the marker makes this idempotent)
       buildEventsFixture(spark, src, out, factor)
       val evS = spark.read.parquet(s"$out/events.parquet").select(
         when(col("event_id") % 10 < 3, lit(7L))
@@ -810,17 +665,8 @@ object ScaleStress {
       def agg(j: DataFrame): DataFrame = j.groupBy("c_mktsegment")
         .agg(sum(col("value")).as("revenue"), count(lit(1)).as("n_events"))
       def time2(label: String)(mk: => DataFrame): Unit = {
-        var best = Double.MaxValue
-        var rep = 0
-        while (rep < 2) {
-          val t0 = System.nanoTime()
-          mk.write.format("noop").mode("overwrite").save()
-          best = math.min(best, (System.nanoTime() - t0) / 1e9)
-          spark.catalog.clearCache(); graft.ext.Caches.releaseAll(spark)
-          rep += 1
-        }
-        timings(label) = best
-        System.err.println(f"[scale] $label: $best%.2f s")
+        timings(label) = bestOf(spark)(noop(mk))
+        System.err.println(f"[scale] $label: ${timings(label)}%.2f s")
       }
       try {
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
@@ -846,128 +692,70 @@ object ScaleStress {
       }
     }
 
-    // IVF-PQ (r10): cost of the full residual-code + ADC + refine path
-    // on a 50-query batch at auto coarse knobs, PLUS the recall gate vs
+    // IVF-PQ: cost of the full residual-code + ADC + refine path on a
+    // 50-query batch at auto coarse knobs, PLUS the recall gate vs
     // exact brute force — the refine re-rank must hold recall@10 even
     // as the corpus densifies (shortlist covers more near-ties).
     if (names.contains("emb_ivfpq_scale")) {
-      val embS = spark.read.parquet(s"$out/embeddings.parquet")
+      val embS = emb()
       graft.functions.GraftFunctions.ensureRegistered(spark)
       val qids = embS.select("vec_id").orderBy("vec_id").limit(50)
-      var best = Double.MaxValue
-      var rep = 0
-      while (rep < 2) {
-        val t0 = System.nanoTime()
-        graft.ext.Embeddings.ivfPqTopK(embS, qids, k = 10)
-          .write.format("noop").mode("overwrite").save()
-        best = math.min(best, (System.nanoTime() - t0) / 1e9)
-        spark.catalog.clearCache(); graft.ext.Caches.releaseAll(spark)
-        rep += 1
-      }
+      val best = bestOf(spark)(noop(graft.ext.Embeddings.ivfPqTopK(embS, qids, k = 10)))
       timings("emb_ivfpq_scale") = best
       // recall vs exact squared-L2 top-10 over the same 50 queries
-      val qside = embS.join(broadcast(qids), "vec_id")
-        .select(col("vec_id").as("qid"),
-          transform(col("embedding"), x => x.cast("double")).as("qe"))
-      val corpus = embS.select(col("vec_id").as("cid"),
-        transform(col("embedding"), x => x.cast("double")).as("ce"))
-      val exact = broadcast(qside).join(corpus, col("qid") =!= col("cid"))
-        .select(col("qid"), col("cid"), expr("squared_l2(qe, ce)").as("dd"))
-        .groupBy("qid").agg(expr("topk_by_score(-dd, cid, 10)").as("top"))
-        .select(col("qid"), explode(col("top")).as("t"))
-        .select(col("qid"), col("t.id").as("cid"))
-        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-      val approx = graft.ext.Embeddings.ivfPqTopK(embS, qids, k = 10)
-        .select("qid", "cid")
-        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+      val exact = exactTop10(embS, qids, "-squared_l2(qe, ce)",
+        v => transform(v, x => x.cast("double")))
+      val approx = pairs(graft.ext.Embeddings.ivfPqTopK(embS, qids, k = 10))
       spark.catalog.clearCache(); graft.ext.Caches.releaseAll(spark)
       val recall = (approx & exact).size.toDouble / math.max(exact.size, 1)
       timings("emb_ivfpq_scale_recall") = recall
       System.err.println(
         f"[scale] emb_ivfpq_scale: $best%.2f s, recall@10 vs exact: $recall%.3f")
-      // r17: the auto-refine contract (constant shortlist fraction —
+      // the auto-refine contract (constant shortlist fraction —
       // Embeddings.autoRefine) must hold recall as the corpus densifies;
       // the fixed refine=16 it replaced measured 0.448 at the 2M gate
       require(factor < 10 || recall >= 0.9,
         f"IVF-PQ auto-refine recall@10 $recall%.3f < 0.9 at factor $factor%d")
     }
 
-    // PageRank (r10): the fixture has no link tables, so synthesize a
-    // hash-derived edge list ∝ factor (n = 20k·factor nodes, 6 directed
-    // edges per node incl. a back-edge so no dangling mass) and time 3
-    // sweeps of the production loop. Pure cost curve — correctness is
-    // the oracle row + GraphSpec.
+    // PageRank and label propagation: the fixture has no link tables,
+    // so both time 3 sweeps of the production loop over the synthetic
+    // graph (n = 20k·factor nodes, 6n directed edges, known exactly —
+    // edgeRowsHint picks the co-partition layout up front). Pure cost
+    // curves — correctness is the oracle rows + GraphSpec. Label
+    // propagation's slope should track PageRank's: both scan edges once
+    // per sweep, all shuffles node-keyed.
     if (names.contains("graph_pagerank_scale")) {
       val n = 20000L * factor
-      val base = spark.range(n).select(col("id"))
-      val edges = base.select(explode(array(
-          struct(col("id").as("src"), pmod(xxhash64(col("id"), lit(1)), lit(n)).as("dst")),
-          struct(col("id").as("src"), pmod(xxhash64(col("id"), lit(2)), lit(n)).as("dst")),
-          struct(col("id").as("src"), ((col("id") + 1) % n).as("dst")))).as("e"))
-        .select(col("e.src").as("src"), col("e.dst").as("dst"))
-      val sym = edges.select(explode(array(
-          struct(col("src"), col("dst")),
-          struct(col("dst").as("src"), col("src").as("dst")))).as("e"))
-        .select(col("e.src").as("src"), col("e.dst").as("dst"))
-      var best = Double.MaxValue
-      var rep = 0
-      while (rep < 2) {
-        val t0 = System.nanoTime()
-        // 6n directed edges, known exactly -> edgeRowsHint picks the
-        // co-partition layout up front (single-copy pin; ADVICE r19)
-        graft.ext.Graph.pageRank(sym, iters = 3, edgeRowsHint = Some(6L * n))
-          .write.format("noop").mode("overwrite").save()
-        best = math.min(best, (System.nanoTime() - t0) / 1e9)
-        spark.catalog.clearCache(); graft.ext.Caches.releaseAll(spark)
-        rep += 1
+      val sym = pageRankEdges(spark, n)
+      val best = bestOf(spark) {
+        noop(graft.ext.Graph.pageRank(sym, iters = 3, edgeRowsHint = Some(6L * n)))
       }
       timings("graph_pagerank_scale") = best
       System.err.println(
         f"[scale] graph_pagerank_scale (${n * 6} directed edges, 3 sweeps): $best%.2f s")
     }
-
-    // Label propagation on the same synthetic graph shape as the
-    // pagerank block (n nodes, 6n directed edges): one sweep = one
-    // (dst,label) map-side-combinable count + node-keyed window + left
-    // join — slope should track pageRank's (both scan edges once per
-    // sweep, all shuffles node-keyed).
     if (names.contains("graph_labelprop_scale")) {
       val n = 20000L * factor
-      val base = spark.range(n).select(col("id"))
-      val edges = base.select(explode(array(
-          struct(col("id").as("a"), pmod(xxhash64(col("id"), lit(1)), lit(n)).as("b")),
-          struct(col("id").as("a"), pmod(xxhash64(col("id"), lit(2)), lit(n)).as("b")),
-          struct(col("id").as("a"), ((col("id") + 1) % n).as("b")))).as("e"))
-        .select(col("e.a").as("a"), col("e.b").as("b"))
-      val sym = edges.select(explode(array(
-          struct(col("a"), col("b")),
-          struct(col("b").as("a"), col("a").as("b")))).as("e"))
-        .select(col("e.a").as("a"), col("e.b").as("b"))
-      val nodes = base.select(col("id").as("node"))
-      var best = Double.MaxValue
-      var rep = 0
-      while (rep < 2) {
-        val t0 = System.nanoTime()
-        graft.ext.Graph.labelPropagation(nodes, sym, iters = 3,
-            edgeRowsHint = Some(6L * n))
-          .write.format("noop").mode("overwrite").save()
-        best = math.min(best, (System.nanoTime() - t0) / 1e9)
-        spark.catalog.clearCache(); graft.ext.Caches.releaseAll(spark)
-        rep += 1
+      val sym = pageRankEdges(spark, n).toDF("a", "b")
+      val nodes = spark.range(n).select(col("id").as("node"))
+      val best = bestOf(spark) {
+        noop(graft.ext.Graph.labelPropagation(nodes, sym, iters = 3,
+          edgeRowsHint = Some(6L * n)))
       }
       timings("graph_labelprop_scale") = best
       System.err.println(
         f"[scale] graph_labelprop_scale (${n * 6} directed edges, 3 sweeps): $best%.2f s")
     }
 
-    // ER candidate discipline at scale (r10, VERDICT r9 item 4): a
-    // part-like table ∝ factor with PLANTED 1-edit pairs (n/2 true
-    // matches by construction; cross-group names are >= 4 edits apart
-    // because the group id appears 5 times). maxBlock = 500 so the 1×
-    // run exercises the exact path (80-row brand blocks) and 10×/100×
-    // (800/8000-row blocks) trip the LSH fallback — pair count must
-    // stay ~n/2 (recall) and wall ~linear, where the uncapped exact
-    // join's pair space grows ~factor².
+    // ER candidate discipline at scale: a part-like table ∝ factor with
+    // PLANTED 1-edit pairs (n/2 true matches by construction;
+    // cross-group names are >= 4 edits apart because the group id
+    // appears 5 times). maxBlock = 500 so the 1× run exercises the
+    // exact path (80-row brand blocks) and 10×/100× (800/8000-row
+    // blocks) trip the LSH fallback — pair count must stay ~n/2 (recall)
+    // and wall ~linear, where the uncapped exact join's pair space grows
+    // ~factor².
     if (names.contains("er_matches_scale")) {
       val n = 2000L * factor
       val g = (col("id") / 2).cast("long")
@@ -983,15 +771,9 @@ object ScaleStress {
         when(col("id") % 2 === 0, baseName)
           .otherwise(concat(baseName.substr(lit(1), length(baseName) - 1),
             lit("q"))).as("p_name"))
-      var best = Double.MaxValue
       var found = 0L
-      var rep = 0
-      while (rep < 2) {
-        val t0 = System.nanoTime()
+      val best = bestOf(spark) {
         found = graft.ext.Graph.erMatches(parts, maxBlock = 500).count()
-        best = math.min(best, (System.nanoTime() - t0) / 1e9)
-        spark.catalog.clearCache(); graft.ext.Caches.releaseAll(spark)
-        rep += 1
       }
       val recall = found.toDouble / (n / 2)
       timings("er_matches_scale") = best
@@ -1002,22 +784,21 @@ object ScaleStress {
           f"$found pairs of ${n / 2} planted, recall $recall%.3f")
     }
 
-    // Two-level coarse router (r10): measure the assign/probe cost cut
-    // at a cell count past the threshold. nCells=8192 on the replicated
+    // Two-level coarse router: measure the assign/probe cost cut at a
+    // cell count past the threshold. nCells=8192 on the replicated
     // embedding fixture is the regime the router exists for (the flat
     // per-row scan is 8192 dists; routed ≈ 91 groups + 8·~90 members).
     // Same query set both ways; both are then gated on RECALL vs the
     // exact brute-force truth (routed within 0.05 of flat) — see the
     // comment at the gate below.
     if (names.contains("ivf_router_scale")) {
-      import graft.ext.Similarity
-      val emb = spark.read.parquet(s"$out/embeddings.parquet")
-      val queries = emb.select("vec_id").orderBy("vec_id").limit(50)
+      val embS = emb()
+      val queries = embS.select("vec_id").orderBy("vec_id").limit(50)
       def runOnce(threshold: Int): (Double, Set[(Long, Long)]) = {
         Similarity.withTwoLevelThreshold(threshold) {
           try {
             val t0 = System.nanoTime()
-            val res = Similarity.ivfTopK(emb, queries, k = 10,
+            val res = Similarity.ivfTopK(embS, queries, k = 10,
                 nCells = 8192, nProbe = 32)
               .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
             ((System.nanoTime() - t0) / 1e9, res)
@@ -1033,7 +814,7 @@ object ScaleStress {
       // agreement conflates two independent miss sets; what the router
       // must preserve is recall, not the identical miss pattern
       val qIds = queries.collect().map(_.getLong(0))
-      val all = emb.select("vec_id", "embedding").collect().map { r =>
+      val all = embS.select("vec_id", "embedding").collect().map { r =>
         val a = r.getSeq[Float](1).map(_.toDouble).toArray
         val n = math.sqrt(a.map(x => x * x).sum)
         (r.getLong(0), if (n == 0) a else a.map(_ / n))
@@ -1061,48 +842,32 @@ object ScaleStress {
           f"(${flatS / routedS}%.1f× wall)")
     }
 
-    // Connected components at scale (r11, VERDICT r10 item 1 "Done"):
-    // a planted graph ∝ the fixture (nodes = nDocs), half 1000-node
-    // CHAINS — the O(diameter) killer that the old min-label sweep
-    // could not finish inside maxIter=50 at ANY size — and half 8-node
-    // cliques (the near-dup blob shape). Reports wall + the
-    // large-star/small-star ROUND count (expected ~log2(1000) ≈ 10,
-    // flat in the factor) and REQUIREs the exact component count.
+    // Connected components at scale: a planted graph ∝ the fixture
+    // (nodes = nDocs), half 1000-node CHAINS — the O(diameter) killer
+    // that a min-label sweep cannot finish inside maxIter=50 at ANY
+    // size — and half 8-node cliques (the near-dup blob shape). Reports
+    // wall + the large-star/small-star ROUND count (expected
+    // ~log2(1000) ≈ 10, flat in the factor) and REQUIREs the exact
+    // component count.
     if (names.contains("cc_scale")) {
-      import spark.implicits._
-      // r20 (ADVICE r19): cc_scale is relational-only runnable, so
-      // nDocs is 0 when the corpus build was skipped — size the planted
-      // graph from the SOURCE document count × factor instead (the
-      // nDocs-equivalent; metadata-cheap parquet count), so the graph
-      // keeps scaling with the requested factor either way
+      // relational-only runnable: when the corpus build was skipped,
+      // size the graph from the SOURCE document count × factor (a
+      // metadata-cheap parquet count) so it keeps scaling either way
       val ccDocs = if (nDocs > 0) nDocs
         else spark.read.parquet(s"$src/documents.parquet").count() * factor
       // round UP to a multiple of 1000: a trailing 1-node chain block
       // emits no edge, so connectedComponents never reports it and the
-      // expected-count require would fail spuriously whenever
-      // half % 1000 == 1 (ADVICE r11)
+      // expected-count require would fail spuriously
       val half = ((math.max(ccDocs / 2, 2000L) + 999L) / 1000L) * 1000L
-      val chains = spark.range(half - 1).filter(col("id") % 1000 =!= 999)
-        .select(col("id").as("doc_a"), (col("id") + 1).as("doc_b"))
-      val bs = 8
-      val pairsDf = (for { i <- 0 until bs; j <- (i + 1) until bs }
-        yield (i, j)).toDF("i", "j")
-      val cliques = spark.range(half / bs).crossJoin(pairsDf)
-        .select((lit(half) + col("id") * bs + col("i")).as("doc_a"),
-          (lit(half) + col("id") * bs + col("j")).as("doc_b"))
-      val edges = chains.unionByName(cliques).cutLineage()
-      val expected = (half + 999) / 1000 + half / bs
-      var best = Double.MaxValue
+      val edges = plantedCcEdges(spark, half).cutLineage()
+      val expected = (half + 999) / 1000 + half / 8
       var rounds = -1
-      (1 to 2).foreach { _ =>
-        val t0 = System.nanoTime()
+      val best = bestOf(spark) {
         val (cc, r) = graft.ext.Dedup.connectedComponentsWithRounds(edges)
         val comps = cc.select("component").distinct().count()
-        best = math.min(best, (System.nanoTime() - t0) / 1e9)
         rounds = r
         require(comps == expected,
           s"cc_scale: $comps components, expected $expected")
-        graft.ext.Caches.releaseAll(spark)
       }
       timings("cc_scale") = best
       timings("cc_scale_rounds") = rounds.toDouble
@@ -1111,43 +876,38 @@ object ScaleStress {
           f"$best%.2f s in $rounds rounds")
     }
 
-    // Exact-setsim LSH fallback (r14, VERDICT r12 item 1 "Done"): the
-    // vocabulary-dense derived fixture is exactly the regime where the
-    // exact path's candidate mass goes quadratic (measured 2.04G
-    // candidates at 100× in r12) — the fallback must COMPLETE there.
-    // maxCandidatePairs=0 forces the fallback at every factor so the
-    // 10× column can also measure its recall against the exact truth
-    // (at 100× the truth itself is the 2G-candidate job — recall is
-    // measured where the exact join is tractable).
+    // Exact-setsim LSH fallback: the vocabulary-dense derived fixture is
+    // exactly the regime where the exact path's candidate mass goes
+    // quadratic (measured 2.04G candidates at 100×) — the fallback must
+    // COMPLETE there. maxCandidatePairs=0 forces the fallback at every
+    // factor so the 10× column can also measure its recall against the
+    // exact truth (at 100× the truth itself is the 2G-candidate job —
+    // recall is measured where the exact join is tractable).
     if (names.contains("setsim_fallback_scale")) {
       val docs = spark.read.parquet(s"$out/documents.parquet")
       val sh = docs.select(col("doc_id"),
         explode(graft.functions.TextShingles.shingle3(
           split(col("text"), "\\s+"))).as("shingle"))
-      var best = Double.MaxValue
       var nPairs = 0L
-      (1 to 2).foreach { _ =>
-        val t0 = System.nanoTime()
+      val best = bestOf(spark) {
         nPairs = graft.queries.SetSimQ
           .setSimJoin(sh, 4, 5, maxCandidatePairs = 0L).count()
-        best = math.min(best, (System.nanoTime() - t0) / 1e9)
-        spark.catalog.clearCache(); graft.ext.Caches.releaseAll(spark)
       }
       timings("setsim_fallback_scale") = best
       timings("setsim_fallback_scale_pairs") = nPairs.toDouble
       System.err.println(
         f"[scale] setsim_fallback_scale: $best%.2f s, $nPairs pairs (forced LSH path)")
       if (factor <= 10) {
-        val truth = graft.queries.SetSimQ
-          .setSimJoinExact(sh, 4, 5, maxCandidatePairs = Long.MaxValue)
-          .select("doc_a", "doc_b")
-          .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-        spark.catalog.clearCache(); graft.ext.Caches.releaseAll(spark)
-        val fb = graft.queries.SetSimQ
-          .setSimJoin(sh, 4, 5, maxCandidatePairs = 0L)
-          .select("doc_a", "doc_b")
-          .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-        spark.catalog.clearCache(); graft.ext.Caches.releaseAll(spark)
+        def docPairs(df: DataFrame): Set[(Long, Long)] = {
+          val r = df.select("doc_a", "doc_b")
+            .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+          spark.catalog.clearCache(); graft.ext.Caches.releaseAll(spark)
+          r
+        }
+        val truth = docPairs(graft.queries.SetSimQ
+          .setSimJoinExact(sh, 4, 5, maxCandidatePairs = Long.MaxValue))
+        val fb = docPairs(graft.queries.SetSimQ
+          .setSimJoin(sh, 4, 5, maxCandidatePairs = 0L))
         require(fb.subsetOf(truth),
           s"setsim fallback emitted ${fb.diff(truth).size} false positives")
         val recall = if (truth.isEmpty) 1.0
@@ -1158,11 +918,11 @@ object ScaleStress {
       }
     }
 
-    // k-core peel convergence gate (r14): the ext_kcore registry row's
-    // fixed 16-round truncation is exact iff the peel converges in
-    // budget — require rounds-8 == rounds-16 output on the fixture
-    // graph (convergence by 8), and report the edge count the peels
-    // chew through.
+    // k-core peel convergence gate: the ext_kcore registry row's fixed
+    // 16-round truncation is exact iff the peel converges in budget —
+    // require rounds-8 == rounds-16 output on the fixture graph
+    // (convergence by 8), and report the edge count the peels chew
+    // through.
     if (names.contains("kcore_scale")) {
       import org.apache.spark.sql.expressions.Window
       val li = spark.read.parquet(s"$out/lineitem.parquet")
@@ -1180,13 +940,8 @@ object ScaleStress {
           greatest(col("u"), col("v")).as("b"))
         .distinct().cutLineage()
       val nEdges = und.count()
-      var best = Double.MaxValue
-      (1 to 2).foreach { _ =>
-        val t0 = System.nanoTime()
-        graft.ext.Graph.corenessCapped(und, kMax = 4, rounds = 16)
-          .write.format("noop").mode("overwrite").save()
-        best = math.min(best, (System.nanoTime() - t0) / 1e9)
-        spark.catalog.clearCache(); graft.ext.Caches.releaseAll(spark)
+      val best = bestOf(spark) {
+        noop(graft.ext.Graph.corenessCapped(und, kMax = 4, rounds = 16))
       }
       val c16 = graft.ext.Graph.corenessCapped(und, 4, 16)
         .collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
@@ -1200,24 +955,19 @@ object ScaleStress {
         f"[scale] kcore_scale ($nEdges edges): $best%.2f s, converged <= 8 rounds")
     }
 
-    // BPE training curve (r14): times Bpe.train DIRECTLY — the
-    // registry row memoizes its merge table per (session, dir), so
-    // timing it through the registry measures the cache on rep 2.
-    // Expected shape: the word-count prelude is linear in corpus
-    // bytes, the 12-step argmax loop is vocab-sized (constant on the
-    // replicated fixture) — so wall should grow far slower than the
-    // corpus.
+    // BPE training curve: times Bpe.train DIRECTLY — the registry row
+    // memoizes its merge table per (session, dir), so timing it through
+    // the registry measures the cache on rep 2. Expected shape: the
+    // word-count prelude is linear in corpus bytes, the 12-step argmax
+    // loop is vocab-sized (constant on the replicated fixture) — so
+    // wall should grow far slower than the corpus.
     if (names.contains("bpe_scale")) {
       val docs = spark.read.parquet(s"$out/documents.parquet")
-      var best = Double.MaxValue
       var nWords = 0L
-      (1 to 2).foreach { _ =>
-        val t0 = System.nanoTime()
+      val best = bestOf(spark) {
         val (merges, seqd) = graft.ext.Bpe.train(docs, 12)
         nWords = seqd.select("word").distinct().count()
         require(merges.length == 12)
-        best = math.min(best, (System.nanoTime() - t0) / 1e9)
-        spark.catalog.clearCache(); graft.ext.Caches.releaseAll(spark)
       }
       timings("bpe_scale") = best
       timings("bpe_scale_vocab") = nWords.toDouble
@@ -1225,9 +975,32 @@ object ScaleStress {
         f"[scale] bpe_scale: $best%.2f s train ($nWords-word vocab)")
     }
 
-    val qs = timings.map { case (k, v) => s""""$k":$v""" }.mkString("{", ",", "}")
-    val es = errors.map { case (k, v) =>
-      s""""$k":"${v.replace("\\", "\\\\").replace("\"", "\\\"").take(200)}"""" }
+    // AQE evidence on the heaviest TPC-H shapes: execute through
+    // collect() so the SAME QueryExecution carries the final adaptive
+    // plan, then count its runtime decisions — AQEShuffleRead
+    // coalescing, broadcast demotion/promotion, skew splits. Q9's full
+    // final plan (the one plans/ pins) is written to target/.
+    if (names.contains("tpch_aqe")) {
+      Seq("sql_tpch_q9", "sql_tpch_q8", "sql_tpch_q21", "sql_tpch_q7",
+          "sql_tpch_q5").foreach { name =>
+        val df = SparkEntry.queries(name)(spark, tpchDir)
+        df.collect()
+        val plan = df.queryExecution.executedPlan.toString
+        def n(pat: String) = pat.r.findAllIn(plan).length
+        System.err.println(s"[scale] tpch_aqe $name " +
+          s"final=${plan.contains("isFinalPlan=true")} " +
+          s"aqeShuffleRead=${n("AQEShuffleRead")} coalesced=${n("coalesced")} " +
+          s"bhj=${n("BroadcastHashJoin")} smj=${n("SortMergeJoin")} " +
+          s"skew=${n("isSkew=true") + n("skewed")}")
+        if (name == "sql_tpch_q9")
+          java.nio.file.Files.writeString(
+            java.nio.file.Paths.get(s"target/tpch_q9_plan_x$factor.txt"), plan)
+        spark.catalog.clearCache(); graft.ext.Caches.releaseAll(spark)
+      }
+    }
+
+    val qs = timings.map { case (k, v) => s"${Json.str(k)}:$v" }.mkString("{", ",", "}")
+    val es = errors.map { case (k, v) => s"${Json.str(k)}:${Json.str(v.take(200))}" }
       .mkString("{", ",", "}")
     println(s"""{"metric":"scale_stress","factor":$factor,"n_docs":$nDocs,"n_vecs":$nVecs,"queries":$qs,"errors":$es}""")
     spark.stop()
